@@ -40,8 +40,60 @@ object Tables {
     graft.plans.ShuffleScale.tuneFor(spark, dir)
     if (name == "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      normalizeEventTs(spark.read.parquet(s"$dir/events.parquet"))
-    } else spark.read.parquet(s"$dir/$name.parquet")
+      normalizeEventTs(parquet(spark, s"$dir/events.parquet"))
+    } else parquet(spark, s"$dir/$name.parquet")
+  }
+
+  /** Session confs that change what parquet schema inference returns. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema")
+
+  private val schemaCache = new scala.collection.concurrent.TrieMap[
+    (String, Long, Seq[Option[String]]), org.apache.spark.sql.types.StructType]
+
+  /** Read a parquet table dir, inferring its schema on the first read only.
+    * A schemaless `spark.read.parquet` runs one Spark job per call (footer
+    * inference, `SchemaMergeUtils.mergeSchemasInParallel`) — one job per
+    * table per query build. Later reads pass the cached schema, which runs
+    * no job and yields the same plan (it is what inference returned).
+    * Keyed by the qualified dir, its modification time and the reader
+    * confs above, so a rewritten dir or a different timestamp reading is
+    * re-inferred; [[graft.gen.GenCache]] also [[invalidateSchemas]] after
+    * it regenerates or sweeps a dir (stores without dir mtimes). A missing
+    * path falls through to the plain read and its usual error. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(conf)
+    val mtime = try Some(fs.getFileStatus(p).getModificationTime)
+      catch { case _: java.io.FileNotFoundException => None }
+    mtime match {
+      case None => spark.read.parquet(path)
+      case Some(m) =>
+        val key = (graft.plans.ShuffleScale.qualified(path, conf), m,
+          inferenceConfs.map(spark.conf.getOption))
+        schemaCache.get(key) match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            schemaCache.putIfAbsent(key, df.schema)
+            df
+        }
+    }
+  }
+
+  /** Forget cached schemas of dirs at or under `path` (see [[parquet]]). */
+  def invalidateSchemas(spark: SparkSession, path: String): Unit = {
+    val norm = graft.plans.ShuffleScale
+      .qualified(path, spark.sparkContext.hadoopConfiguration).stripSuffix("/")
+    schemaCache.keys.foreach { k =>
+      val kn = k._1.stripSuffix("/")
+      if (kn == norm || kn.startsWith(norm + "/")) schemaCache.remove(k)
+    }
   }
 
   /** Data files of a parquet table dir (skips _SUCCESS / hidden files).

@@ -73,9 +73,9 @@ object GenCache {
               generate(spark, base.drop(2).toDouble, tmp.toString)
               Files.createFile(tmp.resolve("_GRAFT_COMPLETE"))
               Files.move(tmp, dirPath, StandardCopyOption.ATOMIC_MOVE)
-              // the dir's bytes just changed under any earlier (pre-
-              // materialization) measurement — drop it (r15 ADVICE)
-              graft.plans.ShuffleScale.invalidate(spark, dir)
+              // the dir's bytes and tables just changed under any earlier
+              // (pre-materialization) measurement or schema — drop them
+              forget(spark, dir)
             }
           } finally lock.release()
         } finally ch.close()
@@ -88,8 +88,15 @@ object GenCache {
     if (Files.exists(p)) {
       val it = Files.walk(p).sorted(java.util.Comparator.reverseOrder())
       try it.forEach(f => Files.delete(f)) finally it.close()
-      graft.plans.ShuffleScale.invalidate(spark, p.toString)
+      forget(spark, p.toString)
     }
+  }
+
+  /** Drop what the session cached about the tables under `dir`: the
+    * shuffle-sizing byte count and the inferred parquet schemas. */
+  private def forget(spark: SparkSession, dir: String): Unit = {
+    graft.plans.ShuffleScale.invalidate(spark, dir)
+    graft.Tables.invalidateSchemas(spark, dir)
   }
 
   /** Stale-generation hygiene: a genVersion bump orphans the previous gen*

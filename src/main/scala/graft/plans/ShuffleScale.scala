@@ -77,7 +77,7 @@ object ShuffleScale {
     * spelling of the SAME directory collapse to one entry — and GenCache's
     * post-sweep invalidate can never leave a stale byte count alive under
     * an alias spelling (r16 ADVICE). */
-  private def qualified(path: String,
+  private[graft] def qualified(path: String,
                         conf: org.apache.hadoop.conf.Configuration): String = {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(conf).makeQualified(p).toString

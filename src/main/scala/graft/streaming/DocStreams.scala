@@ -23,10 +23,11 @@ import graft.ops.Dedup
 object DocStreams {
 
   /** File-source stream over a documents parquet dir; schema is declared
-    * from a one-off batch footer read (the file source requires it). */
+    * from the session's cached batch inference (the file source requires
+    * it; [[graft.Tables.parquet]]). */
   def readDocs(spark: SparkSession, dir: String,
                filesPerTrigger: Int = 1): DataFrame = {
-    val schema = spark.read.parquet(dir).schema
+    val schema = graft.Tables.parquet(spark, dir).schema
     spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", filesPerTrigger)
